@@ -110,22 +110,6 @@ object Bench {
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
-    // Cache hygiene between queries: several entries cache intermediate
-    // frames (dedup stores, shingle sets, the serve enrichment), and
-    // letting those accumulate across 300+ queries makes later queries'
-    // timings depend on earlier queries' leftovers (GC + eviction
-    // pressure). Cheap driver-side bookkeeping — safe to run per entry.
-    // OWNERSHIP ASSUMPTION: this main owns the whole session (nothing
-    // outside it holds cached/checkpointed frames across queries) — a
-    // blanket unpersist is safe here but NOT in library code.
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      // …then release RDD-level state clearCache can't see: localCheckpoint
-      // blocks stranded by iterative operators (clusters, PageRank) and any
-      // persisted RDDs the previous query's frames left behind.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-
     var sinceGc = 0
     // Pay GC debt OUTSIDE the timers. Spark's ContextCleaner only reaps
     // unreferenced broadcast/shuffle state when the driver JVM actually
@@ -140,7 +124,7 @@ object Bench {
     // state + clean heap, and (kpi only) the shared enrichment back in
     // cache so the timed pass measures the query, not the rebuild.
     def fullReset(rebuildEnrichment: Boolean): Unit = {
-      clearState()
+      GraftSession.reset(spark)
       forceGc()
       if (rebuildEnrichment) {
         KpiQueries.persistEnriched(enriched)
@@ -158,7 +142,12 @@ object Bench {
     val medians: Seq[(String, Double)] = plans.map { case (name, fn) =>
       val entryStart = System.nanoTime()
       val isKpi = kpiNames(name)
-      clearState()
+      // Cache hygiene between queries: several entries cache intermediate
+      // frames (dedup stores, shingle sets, the serve enrichment), and
+      // letting those accumulate across 300+ queries makes later queries'
+      // timings depend on earlier queries' leftovers (GC + eviction
+      // pressure). Cheap (no Spark job) — safe to run per entry.
+      GraftSession.reset(spark)
       sinceGc += 1
       if (sinceGc >= gcEvery) forceGc()
       if (isKpi) { // warm-up must read the same warm cache the passes will

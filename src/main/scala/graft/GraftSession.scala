@@ -32,6 +32,24 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(
       math.max(4, Runtime.getRuntime.availableProcessors()))
 
+  /** Drop every cached table and persisted RDD, so the next query starts
+    * from a cold cache. Persisted RDDs include the `localCheckpoint`
+    * blocks iterative operators (clusters, PageRank) leave outside the
+    * SQL cache, which `clearCache` cannot see.
+    *
+    * OWNERSHIP ASSUMPTION: the caller owns the whole session — nothing
+    * holds a cached or checkpoint-backed frame across the call. That holds
+    * for the mains that call this between registry entries (`Bench`,
+    * `Verify`, `Probe`, `WidthCounts`); do not call it from library code:
+    * a `localCheckpoint`-backed frame someone else holds cannot be read
+    * again once its blocks are gone (its lineage is truncated; re-reads
+    * fail, they don't recompute).
+    */
+  def reset(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -52,10 +52,7 @@ object WidthCounts {
           System.err.println(s"[width-counts] $name failed to construct: " +
             e.toString.take(200))
           Nil
-        } finally {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        } finally GraftSession.reset(spark)
       val spread = recs.filter(_.spread)
       if (spread.nonEmpty) {
         pins += ((name, spread.size))

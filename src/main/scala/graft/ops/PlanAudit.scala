@@ -223,7 +223,7 @@ object PlanAudit {
     "TextAnalysis.scala" -> 6)
 
   /** Pinned shuffle budgets for headline queries (measured by
-    * `graft.ShuffleCounts`): a NEW Exchange in one of these plans is a
+    * `exchanges` in `graft.Probe`): a NEW Exchange in one of these plans is a
     * regression a human signs off on by raising the pin, never a silent
     * diff. Every groupBy/join/window costs a shuffle at 100 TB — these
     * numbers ARE the scale story of the flagship paths (q_bpe_tokens at

@@ -12,6 +12,8 @@ near-dup signal scales linearly with volume. Embeddings likewise: original
 2k vectors + hash-random vectors + 1% planted near-identical twins.
 
 Usage: python3 tools/make_fairdocs.py /root/testdata/sf0.1 /tmp/sf100p 100
+Then run `Probe` on the generated dir, naming the entries that read its
+tables: sbt 'runMain graft.Probe /tmp/sf100p q...'
 """
 import sys
 import duckdb

@@ -21,6 +21,8 @@ shifted p_partkey so the %997 BFS seed set scales linearly with the
 node set.
 
 Usage: python3 tools/make_fairgraph_r11.py /root/testdata/sf0.1 /tmp/sf100g 100
+Then run `Probe` on the generated dir, naming the entries that read its
+tables: sbt 'runMain graft.Probe /tmp/sf100g q...'
 """
 import sys, os
 import duckdb

@@ -20,6 +20,8 @@ per-group rank aggregation - group count fixed at 3 return flags, rows
 scale linearly, which is the agg-scaling story we want to measure).
 
 Usage: python3 tools/make_fairparts_r10.py /root/testdata/sf0.1 /tmp/sf100p 100
+Then run `Probe` on the generated dir, naming the entries that read its
+tables: sbt 'runMain graft.Probe /tmp/sf100p q...'
 """
 import sys, os
 import duckdb
